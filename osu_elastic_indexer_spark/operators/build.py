@@ -1111,8 +1111,9 @@ def write_dict_by_term(dictionary: DataFrame, path: str) -> None:
     term_id-ordered (= df-ordered), so a query-time `term IN (...)` lookup
     on it prunes NOTHING and at 10^8 terms becomes a full-vocabulary scan
     per query batch. This projection is globally range-partitioned and
-    sorted by term with small parquet row groups, so term lookups touch
-    only the row groups whose [min,max] term range covers a query term.
+    sorted by term with DICT_ROW_GROUP_BYTES row groups, so a term lookup
+    (dictionary.TermSeek) reads only the groups whose [min,max] term range
+    covers a query term.
 
     The range sample re-reads ``dictionary`` — callers pass the PERSISTED
     frame (both call sites hold it cached), so the extra pass is a cache
@@ -1122,8 +1123,7 @@ def write_dict_by_term(dictionary: DataFrame, path: str) -> None:
         .repartitionByRange(F.col("term"))
         .sortWithinPartitions("term")
         .write.mode("overwrite")
-        # ~fine-grained row groups: a term seek should read KBs, not 128 MB
-        .option("parquet.block.size", str(1 << 21))
+        .option("parquet.block.size", str(DICT_ROW_GROUP_BYTES))
         .parquet(path)
     )
 
@@ -1132,6 +1132,12 @@ def write_dict_by_term(dictionary: DataFrame, path: str) -> None:
 # narrow per-group term_id ranges, so query-time term seeks read only the
 # covering groups (the Lucene term-index granularity analog)
 SEGMENT_ROW_GROUP_BYTES = 1 << 20
+
+# dict_by_term parquet row-group size: a cold term resolve reads one whole
+# group per term per generation, so ~64 KB groups keep it to KBs (at a
+# 2 MB target a ~20k-term vocabulary fits ONE group, and every cold
+# resolve would read the whole file)
+DICT_ROW_GROUP_BYTES = 64 << 10
 
 # fwd parquet row-group size: parquet scans can split no finer than a row
 # group, and the default 128 MB block left an incremental generation's fwd
@@ -1424,8 +1430,6 @@ def build_index(
                 # both counters are known without another agg job
                 return int(dictionary.count())  # cached — metadata-cheap
 
-            dict_pool = ThreadPoolExecutor(max_workers=1)
-            dict_future = dict_pool.submit(_write_dictionary)
             # sort within the merge's hash partitions by term_id: each output
             # file then has narrow per-row-group term_id ranges, so query-time
             # term_id IN (...) filters prune row groups (the Lucene
@@ -1440,27 +1444,34 @@ def build_index(
             blob_bytes = F.length("docs_blob") + F.length("tfs_blob")
             if positions:
                 blob_bytes = blob_bytes + F.length("pos_blob")
-            with arrow_batch_rows(spark, GROUP_BATCH_ROWS):
-                (
-                    segments.observe(
-                        seg_obs,
-                        F.count(F.lit(1)).alias("rows"),
-                        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("postings"),
-                        F.coalesce(F.sum(blob_bytes), F.lit(0)).alias("bytes"),
+            dict_pool = ThreadPoolExecutor(max_workers=1)
+            dict_future = dict_pool.submit(_write_dictionary)
+            # the finally reaps the dictionary-write thread on EVERY exit
+            # path: a failed segments write must not leave it writing an
+            # orphan dictionary after build_index's exception propagates
+            try:
+                with arrow_batch_rows(spark, GROUP_BATCH_ROWS):
+                    (
+                        segments.observe(
+                            seg_obs,
+                            F.count(F.lit(1)).alias("rows"),
+                            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("postings"),
+                            F.coalesce(F.sum(blob_bytes), F.lit(0)).alias("bytes"),
+                        )
+                        .sortWithinPartitions("term_id", "salt")
+                        .write.mode("overwrite")
+                        # small row groups: files are term_id-sorted, so narrow
+                        # per-group [min,max] ranges turn a query's term_id IN
+                        # filter into real row-group pruning — both in Spark's
+                        # scan and the serving tier's footer-indexed seeks
+                        # (one 128 MB group per file spans the whole vocabulary
+                        # and prunes nothing)
+                        .option("parquet.block.size", str(SEGMENT_ROW_GROUP_BYTES))
+                        .parquet(f"{seg_path}/gen=0")
                     )
-                    .sortWithinPartitions("term_id", "salt")
-                    .write.mode("overwrite")
-                    # small row groups: files are term_id-sorted, so narrow
-                    # per-group [min,max] ranges turn a query's term_id IN
-                    # filter into real row-group pruning — both in Spark's
-                    # scan and the serving tier's footer-indexed seeks
-                    # (one 128 MB group per file spans the whole vocabulary
-                    # and prunes nothing)
-                    .option("parquet.block.size", str(SEGMENT_ROW_GROUP_BYTES))
-                    .parquet(f"{seg_path}/gen=0")
-                )
+            finally:
+                dict_pool.shutdown(wait=True)
         n_terms = dict_future.result()
-        dict_pool.shutdown()
         cat.mark_phase(
             schema_version, "dictionary", "done",
             terms=int(n_terms),

@@ -149,37 +149,144 @@ def _lookup_term_info_spark(
     return fold_delta_rows((r.term, r.term_id, r.df) for r in rows)
 
 
+def term_seek_paths(index_dir: str) -> list[str]:
+    """Committed generation dirs a term seek reads: the term-SORTED
+    dict_by_term projection, or the primary dictionary on legacy layouts
+    without it (no pruning there — its term stats never narrow)."""
+    from ..sources.catalog import committed_gen_paths
+
+    return committed_gen_paths(index_dir, "dict_by_term") or committed_gen_paths(
+        index_dir, "dictionary"
+    )
+
+
+def _stat_str(v):  # parquet string stats may surface as bytes
+    return v.decode("utf-8", "replace") if isinstance(v, bytes) else v
+
+
+class TermSeek:
+    """Footer-indexed term seek over term-sorted dictionary files — the
+    Lucene term-index analog. Opening reads each file's footer ONCE and
+    keeps every row group's [min, max] term; ``lookup`` then reads only
+    the groups whose range covers a probe term (column-pruned, filtered
+    with one vectorized ``is_in``) and folds the <= |terms| x gens delta
+    rows through fold_delta_rows. Groups without min/max stats stay
+    candidates for every term (never silently skipped). A long-lived
+    caller (the serving tier) keeps one instance per committed snapshot;
+    one-shot callers build it per call (lookup_term_info)."""
+
+    def __init__(self, files: list[str]):
+        import pyarrow.parquet as pq
+
+        # per file: (ParquetFile, [group lo], [group hi]); lo None = no stats
+        self._files: list[tuple] = []
+        for f in files:
+            pf = pq.ParquetFile(f)
+            md = pf.metadata
+            if md.num_rows == 0 or md.num_row_groups == 0:
+                continue
+            tcol = next(
+                i
+                for i in range(md.row_group(0).num_columns)
+                if md.row_group(0).column(i).path_in_schema == "term"
+            )
+            los, his = [], []
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(tcol).statistics
+                has = st is not None and st.has_min_max
+                los.append(_stat_str(st.min) if has else None)
+                his.append(_stat_str(st.max) if has else None)
+            self._files.append((pf, los, his))
+
+    def lookup(self, terms) -> dict[str, tuple[int, int]]:
+        """{term: (term_id, df)} for the probe terms present in any
+        generation; absent terms are simply missing from the result."""
+        import bisect
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        want = sorted(set(terms))
+        if not want:
+            return {}
+        want_arr = pa.array(want, pa.string())
+
+        def covers(lo, hi):
+            i = bisect.bisect_left(want, lo)
+            return i < len(want) and want[i] <= hi
+
+        return self._fold(
+            covers, lambda col: pc.is_in(col, value_set=want_arr)
+        )
+
+    def prefix_rows(self, prefix: str) -> dict[str, tuple[int, int]]:
+        """Folded rows of every term starting with ``prefix``: a RANGE
+        seek over the groups whose [min, max] intersects [prefix,
+        successor(prefix))."""
+        import pyarrow.compute as pc
+
+        # successor string: smallest string greater than every prefix-match
+        succ = (
+            prefix[:-1] + chr(ord(prefix[-1]) + 1)
+            if ord(prefix[-1]) < 0x10FFFF
+            else None
+        )
+
+        def overlaps(lo, hi):
+            return not (hi < prefix or (succ is not None and lo >= succ))
+
+        return self._fold(overlaps, lambda col: pc.starts_with(col, prefix))
+
+    def _fold(self, pick, keep) -> dict[str, tuple[int, int]]:
+        """Read the groups ``pick(lo, hi)`` selects (plus stats-less ones),
+        keep the rows whose term passes the ``keep`` mask, fold them."""
+        import pyarrow as pa
+
+        parts = []
+        for pf, los, his in self._files:
+            groups = [
+                g
+                for g, (lo, hi) in enumerate(zip(los, his))
+                if lo is None or pick(lo, hi)
+            ]
+            if not groups:
+                continue
+            tbl = pf.read_row_groups(groups, columns=["term", "term_id", "df"])
+            tbl = tbl.filter(keep(tbl.column("term")))
+            if tbl.num_rows:
+                parts.append(tbl)
+        if not parts:
+            return {}
+        t = pa.concat_tables(parts)
+        return fold_delta_rows(
+            zip(
+                t.column("term").to_pylist(),
+                t.column("term_id").to_pylist(),
+                t.column("df").to_pylist(),
+            )
+        )
+
+
 def lookup_term_info(
     spark, index_dir: str, terms: list[str]
 ) -> dict[str, tuple[int, int]]:
     """Driver-side point lookups for a query's terms -> {term: (tid, df)}.
 
-    Pure-pyarrow term seek over the term-SORTED dict_by_term generations:
+    Pure-pyarrow TermSeek over the term-SORTED dict_by_term generations:
     row groups are pruned by their footer (min, max) statistics against the
-    sorted probe list, matched groups are read column-pruned and filtered
-    with one vectorized ``is_in``, and the <= |terms| x gens delta rows
-    fold in python. No Spark job: the previous implementation pushed the
+    sorted probe list. No Spark job: the previous implementation pushed the
     probe list as a Spark ``isin`` literal, whose Catalyst planning cost
     scales with the LIST (a 25k-term incremental batch vocabulary took
     ~15 s of pure planning at sf0.1 — the scan itself is milliseconds).
     Falls back to the primary dictionary when the sorted projection is
-    absent (legacy layout; no pruning there, the stats never match), and
-    to a broadcast-probe Spark scan when the index lives on a
-    Hadoop-filesystem URI the driver's pyarrow can't open (module doc)."""
-    import bisect
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ..sources.catalog import committed_gen_paths
+    absent (term_seek_paths), and to a broadcast-probe Spark scan when the
+    index lives on a Hadoop-filesystem URI the driver's pyarrow can't open
+    (module doc)."""
     from .state import _parquet_files
 
     if not terms:
         return {}
-    paths = committed_gen_paths(index_dir, "dict_by_term") or committed_gen_paths(
-        index_dir, "dictionary"
-    )
+    paths = term_seek_paths(index_dir)
     if not paths:
         return {}
     want = sorted(set(terms))
@@ -191,48 +298,7 @@ def lookup_term_info(
                 "fallback — mount the index or pass spark"
             )
         return _lookup_term_info_spark(spark, paths, want)
-    want_arr = pa.array(want, pa.string())
-
-    def _s(v):  # parquet string stats may surface as bytes
-        return v.decode("utf-8", "replace") if isinstance(v, bytes) else v
-
-    parts = []
-    for f in _parquet_files(tuple(paths)):
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
-        if md.num_rows == 0 or md.num_row_groups == 0:
-            continue
-        tcol = next(
-            i
-            for i in range(md.row_group(0).num_columns)
-            if md.row_group(0).column(i).path_in_schema == "term"
-        )
-        groups = []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(tcol).statistics
-            if st is None or not st.has_min_max:
-                groups.append(g)  # stats-less groups stay candidates
-                continue
-            lo, hi = _s(st.min), _s(st.max)
-            i = bisect.bisect_left(want, lo)
-            if i < len(want) and want[i] <= hi:
-                groups.append(g)
-        if not groups:
-            continue
-        tbl = pf.read_row_groups(groups, columns=["term", "term_id", "df"])
-        tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=want_arr))
-        if tbl.num_rows:
-            parts.append(tbl)
-    if not parts:
-        return {}
-    t = pa.concat_tables(parts)
-    return fold_delta_rows(
-        zip(
-            t.column("term").to_pylist(),
-            t.column("term_id").to_pylist(),
-            t.column("df").to_pylist(),
-        )
-    )
+    return TermSeek(_parquet_files(tuple(paths))).lookup(want)
 
 
 def lookup_terms_by_prefix(
@@ -250,18 +316,11 @@ def lookup_terms_by_prefix(
     On a non-driver-visible (Hadoop-FS URI) index the expansion falls back
     to a Spark scan with the same startswith predicate (pushed to parquet)
     when ``spark`` is supplied, else raises (module doc)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ..sources.catalog import committed_gen_paths
     from .state import _parquet_files
 
     if not prefix:
         return []
-    paths = committed_gen_paths(index_dir, "dict_by_term") or committed_gen_paths(
-        index_dir, "dictionary"
-    )
+    paths = term_seek_paths(index_dir)
     if not paths:
         return []
     if not _driver_visible(paths):
@@ -278,50 +337,7 @@ def lookup_terms_by_prefix(
             .collect()
         )
         folded = fold_delta_rows((r.term, r.term_id, r.df) for r in rows)
-        live = sorted(t for t, (_tid, df) in folded.items() if df > 0)
-        return live[:max_expansions] if max_expansions is not None else live
-    # successor string: smallest string greater than every prefix-match
-    hi = prefix[:-1] + chr(ord(prefix[-1]) + 1) if ord(prefix[-1]) < 0x10FFFF else None
-
-    def _s(v):
-        return v.decode("utf-8", "replace") if isinstance(v, bytes) else v
-
-    parts = []
-    for f in _parquet_files(tuple(paths)):
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
-        if md.num_rows == 0 or md.num_row_groups == 0:
-            continue
-        tcol = next(
-            i
-            for i in range(md.row_group(0).num_columns)
-            if md.row_group(0).column(i).path_in_schema == "term"
-        )
-        groups = []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(tcol).statistics
-            if st is None or not st.has_min_max:
-                groups.append(g)
-                continue
-            lo_g, hi_g = _s(st.min), _s(st.max)
-            if hi_g < prefix or (hi is not None and lo_g >= hi):
-                continue
-            groups.append(g)
-        if not groups:
-            continue
-        tbl = pf.read_row_groups(groups, columns=["term", "term_id", "df"])
-        tbl = tbl.filter(pc.starts_with(tbl.column("term"), prefix))
-        if tbl.num_rows:
-            parts.append(tbl)
-    if not parts:
-        return []
-    t = pa.concat_tables(parts)
-    folded = fold_delta_rows(
-        zip(
-            t.column("term").to_pylist(),
-            t.column("term_id").to_pylist(),
-            t.column("df").to_pylist(),
-        )
-    )
+    else:
+        folded = TermSeek(_parquet_files(tuple(paths))).prefix_rows(prefix)
     live = sorted(term for term, (_tid, df) in folded.items() if df > 0)
     return live[:max_expansions] if max_expansions is not None else live

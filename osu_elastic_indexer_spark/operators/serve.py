@@ -19,18 +19,22 @@ import math
 import os
 
 import numpy as np
-import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
 from ..config import DEFAULT
 from ..functions.textprep import tokenize
 from .wand import TAAT_MAX_POSTINGS, bmw_topk, taat_topk
 
-_SEG_COLS = [
-    "term_id", "doc_min", "n_docs", "docs_blob", "tfs_blob",
+# segment columns per read path: the TAAT/decode-cache path decodes whole
+# rows from the two blobs alone (codec.decode_postings); the block metadata
+# is read only by the exact BMW core, and the positions only by the
+# positional phrase verify
+_TAAT_COLS = ["term_id", "doc_min", "n_docs", "docs_blob", "tfs_blob"]
+_SEG_COLS = _TAAT_COLS + [
     "doc_offs", "tf_offs", "block_first", "block_last",
     "block_max_tf", "block_min_dl",
 ]
+_POS_COLS = _SEG_COLS + ["pos_blob", "pos_offs"]
 
 # Decoded-postings cache budget per searcher (~16 bytes/posting). Aligned
 # with TAAT_MAX_POSTINGS: df-based dispatch routes terms with up to that
@@ -85,38 +89,25 @@ class LocalSearcher:
         st = pq.read_table(resolve_table_dir(index_dir, "stats")).to_pylist()[0]
         self.n_docs = int(st["n_docs"])
         self.avgdl = float(st["avgdl"])
-        # term -> (term_id, df): lazy row-group-pruned lookups on the
+        # term -> (term_id, df): lazy footer-indexed seeks on the
         # term-SORTED dict_by_term projection's committed generations (the
         # Lucene term-dictionary-seek analog — a searcher never holds 10^8
-        # terms in a python dict); per-gen DELTA rows fold at lookup
-        # (term_id = max, df = sum — operators/dictionary.py). Resolved
-        # terms are memoized. Indexes without the projection fall back to
-        # one eager merged load of the primary dictionary gens.
-        from .state import _parquet_files as _pfiles
+        # terms in a python dict). The per-group [min, max] term index is
+        # built once here (dictionary.TermSeek), so a resolve reads only the
+        # dictionary groups covering its terms; per-gen DELTA rows fold at
+        # lookup (term_id = max, df = sum). Resolved terms are memoized.
+        from .dictionary import TermSeek, term_seek_paths
+        from .state import _parquet_files
 
-        bt_files = _pfiles(tuple(committed_gen_paths(index_dir, "dict_by_term")))
         self._dict: dict[str, tuple[int, int]] = {}
-        self._dict_ds = ds.dataset(bt_files) if bt_files else None
-        if self._dict_ds is None:
-            d_files = _pfiles(tuple(committed_gen_paths(index_dir, "dictionary")))
-            if d_files:
-                from .dictionary import fold_delta_rows
-
-                d = ds.dataset(d_files).to_table(
-                    columns=["term", "term_id", "df"]
-                )
-                self._dict = fold_delta_rows(
-                    zip(
-                        d.column("term").to_pylist(),
-                        d.column("term_id").to_pylist(),
-                        d.column("df").to_pylist(),
-                    )
-                )
+        self._term_seek = TermSeek(
+            _parquet_files(tuple(term_seek_paths(index_dir)))
+        )
         # norms + tombstones via the shared executor-side loaders (sorted
         # int64 arrays; the Lucene live-docs/norms analog a searcher keeps
         # hot) — committed snapshot paths, keyed by the manifest's monotonic
         # commit_seq
-        from .state import _parquet_files, load_norms, load_tombstones
+        from .state import load_norms, load_tombstones
         from .wand import manifest_commit_seq
 
         seq = manifest_commit_seq(index_dir)
@@ -163,7 +154,7 @@ class LocalSearcher:
         self._pos_decoded: dict[str, tuple] = {}
 
     def _load_term_rows(
-        self, term_ids: list[int], with_positions: bool = False
+        self, term_ids: list[int], cols: list[str] = _SEG_COLS
     ) -> dict[int, list[dict]]:
         if not self._seg_pfs:
             return {}
@@ -178,11 +169,6 @@ class LocalSearcher:
         parts = []
         for fi in np.unique(self._rg_file[hit]):
             groups = self._rg_idx[hit[self._rg_file[hit] == fi]]
-            cols = (
-                _SEG_COLS + ["pos_blob", "pos_offs"]
-                if with_positions
-                else _SEG_COLS
-            )
             parts.append(
                 self._seg_pfs[int(fi)].read_row_groups(
                     [int(g) for g in groups], columns=cols
@@ -201,18 +187,13 @@ class LocalSearcher:
         tids = tbl.column("term_id").to_numpy()
         doc_mins = tbl.column("doc_min").to_numpy()
         n_docs_col = tbl.column("n_docs").to_numpy()
-        blob_cols = ("docs_blob", "tfs_blob") + (
-            ("pos_blob",) if with_positions else ()
-        )
-        blobs = {
-            c: tbl.column(c).to_pylist()  # bytes stay python objects
-            for c in blob_cols
+        blobs = {  # bytes stay python objects
+            c: tbl.column(c).to_pylist() for c in cols if c.endswith("_blob")
         }
         flat = {}
-        for c in (
-            "doc_offs", "tf_offs", "block_first", "block_last",
-            "block_max_tf", "block_min_dl",
-        ) + (("pos_offs",) if with_positions else ()):
+        for c in cols:
+            if c in _TAAT_COLS or c.endswith("_blob"):
+                continue
             arr = tbl.column(c).combine_chunks()
             flat[c] = (
                 arr.values.to_numpy(zero_copy_only=False).astype(
@@ -222,14 +203,9 @@ class LocalSearcher:
             )
         rows: dict[int, list[dict]] = {}
         for i in range(n):
-            enc = {
-                "docs_blob": blobs["docs_blob"][i],
-                "tfs_blob": blobs["tfs_blob"][i],
-                "doc_min": int(doc_mins[i]),
-                "n_docs": int(n_docs_col[i]),
-            }
-            if with_positions:
-                enc["pos_blob"] = blobs["pos_blob"][i]
+            enc = {"doc_min": int(doc_mins[i]), "n_docs": int(n_docs_col[i])}
+            for c, vals in blobs.items():
+                enc[c] = vals[i]
             for c, (vals, offs) in flat.items():
                 enc[c] = vals[offs[i] : offs[i + 1]]
             rows.setdefault(int(tids[i]), []).append(enc)
@@ -238,28 +214,14 @@ class LocalSearcher:
         return rows
 
     def _resolve_terms(self, terms: list[str]) -> None:
-        """Memoize term -> (term_id, df) for unseen terms via ONE pruned
-        read of the term-sorted projection (no-op without it: the fallback
-        eagerly loaded everything). Misses are memoized as absent so a hot
-        OOV term never re-reads."""
-        if self._dict_ds is None:
-            return
+        """Memoize term -> (term_id, df) for unseen terms via one
+        footer-indexed seek that reads only the dictionary row groups
+        covering them (one per term per generation). Misses are memoized
+        as absent so a hot OOV term never re-reads."""
         miss = [t for t in terms if t not in self._dict]
         if not miss:
             return
-        from .dictionary import fold_delta_rows
-
-        tbl = self._dict_ds.to_table(
-            columns=["term", "term_id", "df"],
-            filter=ds.field("term").isin(miss),
-        )
-        found = fold_delta_rows(
-            zip(
-                tbl.column("term").to_pylist(),
-                tbl.column("term_id").to_pylist(),
-                tbl.column("df").to_pylist(),
-            )
-        )
+        found = self._term_seek.lookup(miss)
         for t in miss:
             self._dict[t] = found.get(t)
 
@@ -316,7 +278,11 @@ class LocalSearcher:
                 self._decoded[t] = self._decoded.pop(t)
             else:
                 need.append((t, tid))
-        rows = self._load_term_rows([tid for _t, tid in need]) if need else {}
+        rows = (
+            self._load_term_rows([tid for _t, tid in need], _TAAT_COLS)
+            if need
+            else {}
+        )
         self._decode_terms_parallel(need, rows)
 
     def search_bool(self, spec: dict, k: int = 10) -> list[tuple[int, float]]:
@@ -736,9 +702,7 @@ class LocalSearcher:
         )
         need = [t for t in infos if t not in self._pos_decoded]
         rows = (
-            self._load_term_rows(
-                [int(infos[t][0]) for t in need], with_positions=True
-            )
+            self._load_term_rows([int(infos[t][0]) for t in need], _POS_COLS)
             if need
             else {}
         )

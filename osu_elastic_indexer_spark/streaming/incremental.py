@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.build import (
+    DICT_ROW_GROUP_BYTES,
     FWD_SCHEMA,
     GROUP_BATCH_ROWS,
     SEGMENT_ROW_GROUP_BYTES,
@@ -462,17 +463,23 @@ def incremental_update(
                 "df": _pa.array([r[2] for r in dict_rows], _pa.int64()),
             }
         )
-        for d_, t_ in (
-            (dict_gen_dir, dt),
-            # term-SORTED projection with small row groups (the same
-            # term-seek layout write_dict_by_term produces)
-            (bt_gen_dir, dt.select(["term", "term_id", "df"]).sort_by("term")),
+        bt = dt.select(["term", "term_id", "df"]).sort_by("term")
+        for d_, t_, rg_rows in (
+            (dict_gen_dir, dt, 50_000),
+            # term-SORTED projection in the row groups write_dict_by_term
+            # targets (DICT_ROW_GROUP_BYTES), so a resolve seeks a delta
+            # generation at the same granularity as gen 0
+            (
+                bt_gen_dir,
+                bt,
+                max(1, DICT_ROW_GROUP_BYTES * bt.num_rows // max(1, bt.nbytes)),
+            ),
         ):
             shutil.rmtree(d_, ignore_errors=True)  # crashed-attempt replay
             os.makedirs(d_)
             _pq.write_table(
                 t_, os.path.join(d_, "part-00000.parquet"),
-                row_group_size=50_000,
+                row_group_size=rg_rows,
             )
     else:
         dict_delta.write.mode("overwrite").parquet(dict_gen_dir)

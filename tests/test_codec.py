@@ -2,7 +2,7 @@
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from osu_elastic_indexer_spark.functions.codec import (
@@ -73,6 +73,35 @@ def test_postings_roundtrip_and_blocks():
         assert enc["block_max_tf"][b] == tfs[lo:hi].max()
         assert enc["block_min_dl"][b] == dls[lo:hi].min()
 
+
+
+# the five segment columns the serving tier's TAAT/decode-cache path reads
+_TAAT_COLS = ("term_id", "doc_min", "n_docs", "docs_blob", "tfs_blob")
+
+
+@given(
+    n=st.integers(min_value=1, max_value=3 * BLOCK + 5),
+    seed=st.integers(min_value=0, max_value=2**32 - 1),
+)
+@example(n=1, seed=0)
+@example(n=BLOCK - 1, seed=1)
+@example(n=BLOCK, seed=2)
+@example(n=BLOCK + 1, seed=3)
+@example(n=2 * BLOCK, seed=4)
+@settings(max_examples=60, deadline=None)
+def test_decode_taat_columns_equals_full_row(n, seed):
+    """A segment row cut to the five TAAT columns (no block metadata)
+    decodes exactly like the full row: the block grid comes from the gap
+    count, at and around every block boundary."""
+    rng = np.random.default_rng(seed)
+    doc_ids = np.sort(rng.choice(50 * n, size=n, replace=False)).astype(np.int64)
+    tfs = rng.integers(1, 300, n).astype(np.int64)
+    row = dict(encode_postings(doc_ids, tfs), term_id=7, doc_min=int(doc_ids[0]))
+    cut = {c: row[c] for c in _TAAT_COLS}
+    d_full, tf_full = decode_postings(row)
+    d_cut, tf_cut = decode_postings(cut)
+    assert np.array_equal(d_cut, d_full) and np.array_equal(tf_cut, tf_full)
+    assert np.array_equal(d_cut, doc_ids) and np.array_equal(tf_cut, tfs)
 
 @given(
     ids=st.lists(

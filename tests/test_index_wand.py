@@ -382,3 +382,31 @@ def test_closed_index_read_refusal(spark, built_index):
         cat.open_index("v1")
     assert wand_topk(spark, idx, [(0, "zebra")], 5).count() > 0
     assert LocalSearcher(idx).search("zebra", 5)
+
+
+def test_build_reaps_dictionary_thread_when_segments_write_fails(
+    spark, corpus_path, tmp_path, monkeypatch
+):
+    """The dictionary writes run on a pool thread concurrently with the
+    segments write; when the segments write raises, build_index must still
+    join that thread before its exception propagates — no pool thread may
+    outlive the call, still writing an orphan dictionary."""
+    import threading
+
+    from osu_elastic_indexer_spark.operators import build as build_mod
+
+    def failing_segments_write(*_a, **_kw):
+        raise RuntimeError("injected segments-write failure")
+
+    monkeypatch.setattr(build_mod, "arrow_batch_rows", failing_segments_write)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected segments-write failure"):
+        build_index(
+            spark, spark.read.parquet(corpus_path), Catalog(str(tmp_path)), "v1"
+        )
+    leftover = [
+        t.name
+        for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert not leftover, f"pool threads outlived build_index: {leftover}"

@@ -88,12 +88,14 @@ def test_spimi_dict_join_flips_over_threshold(spark, tmp_path):
         spark.conf.set(key, old)
 
 
-def test_dict_by_term_lookup_is_pruned_seek(spark, tmp_path):
+def test_dict_by_term_lookup_is_pruned_seek(spark, tmp_path, monkeypatch):
     """Query-time term lookups must hit the term-SORTED dict_by_term
     projection with the IN filter pushed to the scan (the term-seek analog;
     the primary dictionary is term_id-ordered so a term filter on it prunes
     nothing), and the projection must be term-sorted within files so parquet
-    min/max stats actually cut row groups."""
+    min/max stats actually cut row groups. Its small row groups must make
+    the cut real: a one-term lookup_term_info and a one-term cold
+    LocalSearcher.search each read exactly the one covering group."""
     import pyarrow.parquet as pq_
     from pyspark.sql import functions as F
 
@@ -125,6 +127,47 @@ def test_dict_by_term_lookup_is_pruned_seek(spark, tmp_path):
     assert d1.select("term", "term_id").exceptAll(
         d2.select("term", "term_id")
     ).count() == 0
+    # footer-indexed seek: the projection spans several row groups, and a
+    # one-term driver lookup and a one-term cold search each read ONLY the
+    # dictionary group whose [min, max] covers the term
+    from osu_elastic_indexer_spark.operators.dictionary import lookup_term_info
+    from osu_elastic_indexer_spark.operators.serve import LocalSearcher
+
+    files = sorted(
+        f for g in bt_paths for f in glob.glob(_os.path.join(g, "*.parquet"))
+    )
+    assert sum(pq_.ParquetFile(f).metadata.num_row_groups for f in files) > 1
+    term = pq_.read_table(files[-1], columns=["term"]).column("term")[-1].as_py()
+    dict_reads = []
+    orig = pq_.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, *a, **kw):
+        cols = kw.get("columns") or (a[0] if a else None)
+        if cols is not None and "term" in cols:
+            md = self.metadata
+            tcol = md.schema.names.index("term")
+            dict_reads.append(
+                [
+                    (md.row_group(g).column(tcol).statistics.min,
+                     md.row_group(g).column(tcol).statistics.max)
+                    for g in row_groups
+                ]
+            )
+        return orig(self, row_groups, *a, **kw)
+
+    def assert_one_covering_group():
+        assert len(dict_reads) == 1 and len(dict_reads[0]) == 1, dict_reads
+        lo, hi = dict_reads[0][0]
+        assert lo <= term <= hi
+        dict_reads.clear()
+
+    idx = cat.index_dir("v1")
+    searcher = LocalSearcher(idx)
+    monkeypatch.setattr(pq_.ParquetFile, "read_row_groups", spy)
+    assert term in lookup_term_info(None, idx, [term])
+    assert_one_covering_group()
+    assert searcher.search(term, 10)
+    assert_one_covering_group()
 
 
 def test_ann_index_scans_are_partition_pruned(spark, tmp_path):
